@@ -48,7 +48,7 @@ DEFAULTS: dict[str, Any] = {
         "profile_prefixes": ["5", "7", "6", "3", ""],  # scraper_v2.py:1259
         # politeness parallelism: partitions × per-row delay bounds the
         # cluster-wide request rate (the reference's --workers,
-        # scraper_v2.py:1606); None lets Spark choose
+        # scraper_v2.py:1606); None = one partition per core
         "fetch_partitions": None,
     },
     "io": {

@@ -270,7 +270,10 @@ def add_core_name(
       kernel-everywhere form cost 0.77 s on a 1.5k-row broadcast join
       whose oracle runs in 0.04 s); the codegen chain is effectively
       free there, and its re-evaluation toll only matters on inputs
-      big enough that callers persist anyway.
+      big enough that callers persist anyway. Both figures were
+      measured before AQE could coalesce persisted legs, when each
+      kernel ran 32 Python tasks at ~0.3 s apiece on ``local[4]``
+      (session.py); the break-even has not been re-measured since.
 
     Both forms are semantically identical (the chain IS the semantic
     reference; the kernel is fuzz-pinned to it). Persists are tracked

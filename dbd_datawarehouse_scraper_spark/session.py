@@ -11,6 +11,16 @@ so the same code is correct on a 1000-executor cluster against ~100 TB:
   across engines (and match a DuckDB oracle).
 - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; AQE
   coalesces down. At cluster scale raise it to ~2-3x total cores.
+- AQE also coalesces inside persisted plans
+  (``canChangeCachedPlanOutputPartitioning``; Spark's default is off).
+  Without it every ``tracked_persist``'d leg keeps the full
+  shuffle-partition layout, and on small legs the fixed per-task cost
+  dominates: one Python task costs about 0.3 s whatever it does
+  (``local[4]`` on a 4-core VM), so each ``add_core_name`` Arrow stage
+  of the E1 scrape took 2.2-2.8 s as 32 tasks and 0.4 s as one, and
+  the whole scrape ran ~34 s → ~19 s (BENCH_NOTES.md). The one stage
+  that must not collapse with its input is the remote fetch; it sizes
+  itself (``sources/http_fetch.py``).
 """
 
 from __future__ import annotations
@@ -23,6 +33,9 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce the shuffles inside persisted (cached) plans too;
+    # see the module docstring
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",

@@ -21,7 +21,13 @@ use ``FakeDbdFetcher`` (deterministic, in-memory); a production
 deployment plugs an HTTP/Selenium client with the same protocol. The
 cluster-wide request rate is controlled by partition count
 (``fetch_partitions``) × per-row delay — the one place the engine pins
-parallelism explicitly instead of letting AQE choose.
+parallelism explicitly instead of letting AQE choose. Each fetch source
+round-robins its input over ``fetch_partitions`` tasks, or one per core
+(``defaultParallelism``) when it is None — the analog of the
+reference's ``Pool(workers)``. It does so unconditionally: AQE coalesces
+persisted legs too (session.py), so a small input may arrive as one
+partition, which would otherwise put every remote call behind one
+client.
 """
 
 from __future__ import annotations
@@ -112,7 +118,7 @@ class FakeDbdFetcher:
         fail_regs: frozenset[str] = frozenset(),
         redirect_singletons: bool = True,
     ):
-        self.registry = sorted(registry)
+        self.registry = registry
         self.years = years
         self.income_fields = income_fields
         self.balance_fields = balance_fields
@@ -121,6 +127,17 @@ class FakeDbdFetcher:
         self.search_calls = 0
         self.profile_calls = 0
         self.closed = False
+
+    @property
+    def registry(self) -> list[tuple[str, str]]:
+        return self._registry
+
+    @registry.setter
+    def registry(self, rows: list[tuple[str, str]]) -> None:
+        # the membership set is built once per assignment, not per profile
+        # call; a subclass that swaps the registry keeps it in step
+        self._registry = sorted(rows)
+        self._regs = frozenset(r for r, _ in self._registry)
 
     def _hits(self, term: str) -> list[tuple[str, str]]:
         return [(reg, disp) for reg, disp in self.registry if term and term in disp]
@@ -153,7 +170,7 @@ class FakeDbdFetcher:
         prefix = prefixed_reg[: -len(reg)]
         if reg in self.fail_regs:
             raise ConnectionError(f"injected failure for {reg}")
-        if reg not in {r for r, _ in self.registry}:
+        if reg not in self._regs:
             return None
         if prefix != self._valid_prefix(reg):
             return None
@@ -211,6 +228,14 @@ FINANCIAL_LONG_SCHEMA = T.StructType(
         T.StructField("fetch_error", T.StringType()),
     ]
 )
+
+
+def _fetch_stage(df: DataFrame, fetch_partitions: int | None) -> DataFrame:
+    """Round-robin the fetch input over ``fetch_partitions`` tasks, one
+    per core by default, whatever partitioning the input arrives with
+    (see the module docstring)."""
+    n = fetch_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n)
 
 
 def _with_retry(fn, max_retries: int, backoff_unit: float):
@@ -273,10 +298,9 @@ def fetch_search_results(
         finally:
             fetcher.close()
 
-    df = companies_with_terms
-    if fetch_partitions:
-        df = df.repartition(fetch_partitions)
-    return df.mapInPandas(run, SEARCH_RESULT_SCHEMA)
+    return _fetch_stage(companies_with_terms, fetch_partitions).mapInPandas(
+        run, SEARCH_RESULT_SCHEMA
+    )
 
 
 def _result_row(
@@ -383,10 +407,9 @@ def fetch_financial_pages(
         finally:
             fetcher.close()
 
-    df = matched
-    if fetch_partitions:
-        df = df.repartition(fetch_partitions)
-    return df.mapInPandas(run, FINANCIAL_LONG_SCHEMA)
+    return _fetch_stage(matched, fetch_partitions).mapInPandas(
+        run, FINANCIAL_LONG_SCHEMA
+    )
 
 
 def _extract_one(

@@ -201,3 +201,30 @@ def test_release_caches_drops_drained_thread_pools(spark):
     # with content could remain — there is none here)
     assert all(lv or sc for lv, sc in caching._POOLS.values()) or not caching._POOLS
     assert len(caching._POOLS) == 0
+
+
+def test_persisted_shuffle_coalesces(spark):
+    """AQE coalesces the exchange inside a persisted plan (the session's
+    canChangeCachedPlanOutputPartitioning): a tiny aggregate behind a
+    hash shuffle reads back with at most one partition per core instead
+    of the spark.sql.shuffle.partitions layout, and its rows are those of
+    the same plan unpersisted."""
+    def plan():
+        return (
+            spark.range(500)
+            .withColumn("k", F.col("id") % 7)
+            .groupBy("k")
+            .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+        )
+
+    release_caches()
+    # a separate Dataset: persisting one that has already run would
+    # cache its executed plan, whatever the session's setting
+    expected = sorted(plan().collect())
+    cached = tracked_persist(plan())
+    assert cached.count() == 7
+    assert cached.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert sorted(cached.collect()) == expected
+    assert release_caches(blocking=True) == 1
+    assert live_persist_count() == 0
+    assert _jvm_persisted(spark) == 0

@@ -190,6 +190,54 @@ def test_retry_then_error_row(spark, conf, companies_df):
     assert "injected failure" in reasons.get("บริษัท ทดสอบ จำกัด", "")
 
 
+def test_fetch_stages_size_to_cores(spark):
+    """Both fetch sources run one partition per core by default, even over
+    a persisted single-partition input (what AQE makes of a small
+    persisted leg); an explicit fetch_partitions still wins, and the
+    partition count never changes the output."""
+    from collections import Counter
+
+    from dbd_datawarehouse_scraper_spark.caching import release_caches, tracked_persist
+    from dbd_datawarehouse_scraper_spark.functions.search_terms import add_search_terms
+    from dbd_datawarehouse_scraper_spark.sources.http_fetch import (
+        fetch_financial_pages,
+        fetch_search_results,
+    )
+
+    release_caches()
+    names = spark.createDataFrame([(n,) for n, _ in COMPANIES], ["company_name"])
+    terms = tracked_persist(add_search_terms(names).repartition(1))
+    matched = tracked_persist(
+        spark.createDataFrame(
+            [(disp, reg, "exact", "1") for reg, disp in REGISTRY],
+            ["company_name", "registration_number", "match_type", "search_strategy"],
+        ).repartition(1)
+    )
+    assert terms.rdd.getNumPartitions() == matched.rdd.getNumPartitions() == 1
+
+    cores = spark.sparkContext.defaultParallelism
+    for fetch, src in ((fetch_search_results, terms), (fetch_financial_pages, matched)):
+        default = fetch(src, factory)
+        explicit = fetch(src, factory, fetch_partitions=3)
+        assert default.rdd.getNumPartitions() == cores
+        assert explicit.rdd.getNumPartitions() == 3
+        rows = default.collect()
+        assert rows and Counter(rows) == Counter(explicit.collect())
+    release_caches(blocking=True)
+
+
+def test_fake_fetcher_registry_reassignment():
+    """The fixture's membership set follows a reassigned registry (the
+    benchmark's simulated site swaps it per profile call)."""
+    reg = "0105536041713"  # valid under prefix '3'
+    fetcher = FakeDbdFetcher([])
+    assert fetcher.profile("3" + reg) is None
+    fetcher.registry = [(reg, "บริษัท ทดสอบ จำกัด")]
+    assert fetcher.profile("3" + reg) is not None
+    fetcher.registry = []
+    assert fetcher.profile("3" + reg) is None
+
+
 def test_page_cap_limits_fetches():
     """max_pages caps pagination (scraper_v2.py:929-941): a term with 3
     pages of hits but max_pages=2 fetches exactly 2 pages."""
